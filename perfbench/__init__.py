@@ -1,0 +1,1 @@
+"""Standalone benchmark of the engine; entry point: ``perfbench/run.py``."""
